@@ -3,18 +3,31 @@ synthesis over the property graph.
 
 Execution lifecycle mirrors the reference's serving path (SURVEY.md
 §3.1): plan → execute (DataFrame plan, Catalyst optimizes) → on empty
-result, fallback full-text search (AND-of-terms then OR-of-terms, LIMIT
-100, `neo4j_query_executor.py:389-459`) → format rows (F14) → synthesize
-an answer (pluggable; deterministic default so tests never call an LLM,
+result, fallback full-text search (`neo4j_query_executor.py:340-344,
+389-459`) → format rows (F14) → synthesize an answer (pluggable;
+deterministic default so tests never call an LLM,
 `neo4j_query_executor.py:346-384`).
+
+A request pays only for the stage that answers it.  The cascade is
+lazy: the fallback is planned only after the template stage came back
+empty, so a template hit never touches ``documents``.  The fallback is
+one scan, like the reference's single union-predicate query: an OR of
+the terms, ordered all-terms-first then by ``doc_id``, LIMIT 100.  Its
+all-terms rows at the front are the AND answer (``fallback_and``); with
+none of them, its rows are the OR answer (``fallback_or``).  The
+``documents`` frame is resolved once per session and dataset and
+re-resolved when the file changes.
 """
 
 from __future__ import annotations
 
+import operator
+import os
 import re
 from collections.abc import Callable
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -313,28 +326,85 @@ def execute_plan(spark: SparkSession, sf_dir: str, p: QueryPlan) -> DataFrame:
     return TEMPLATES[p.template](g, **p.params).limit(RESULT_LIMIT)
 
 
+# Session-scoped ``documents`` frames, keyed like ``_GRAPH_CACHE`` on
+# (application id, abspath(sf_dir)) and holding the ``os.stat``
+# fingerprint of the file they were read from: resolving the table costs
+# a schema-inference job, a footer read and a plan analysis, which a
+# request should not pay again for the same file.
+_DOCS_CACHE: dict[tuple[str, str], tuple[tuple, DataFrame]] = {}
+
+
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # stat before load: a file replaced in between leaves the older
+    # fingerprint next to the newer frame, which only costs a reload
+    try:
+        st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    except OSError:
+        # not a local path os.stat can see (missing, remote): read it
+        # uncached, so Spark reports its errors as before
+        return load_table(spark, sf_dir, "documents")
+    fingerprint = (st.st_ino, st.st_size, st.st_mtime_ns)
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
+    cached = _DOCS_CACHE.get(key)
+    if cached is not None and cached[0] == fingerprint:
+        return cached[1]
+    docs = load_table(spark, sf_dir, "documents")
+    _DOCS_CACHE[key] = (fingerprint, docs)
+    return docs
+
+
+def _term_hits(terms: list[str]) -> list:
+    """One case-insensitive substring predicate per term."""
+    text = F.lower(F.col("text"))
+    return [text.contains(t.lower()) for t in terms]
+
+
 def fulltext_search(
     spark: SparkSession, sf_dir: str, terms: list[str], require_all: bool
 ) -> DataFrame:
-    """Q3 fallback scan over documents: AND (P8) or case-insensitive OR
+    """Q3 full-text scan over documents: AND (P8) or case-insensitive OR
     (P9) of terms, LIMIT 100."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = _documents(spark, sf_dir)
     if not terms:
         return docs.select("doc_id", "text").limit(0)
-    if require_all:
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.lower(F.col("text")).contains(t.lower())
-    else:
-        cond = F.lit(False)
-        for t in terms:
-            cond = cond | F.lower(F.col("text")).contains(t.lower())
+    cond = reduce(operator.and_ if require_all else operator.or_, _term_hits(terms))
     return (
         docs.filter(cond)
         .select("doc_id", F.substring("text", 1, 120).alias("snippet"))
         .orderBy("doc_id")
         .limit(FALLBACK_LIMIT)
     )
+
+
+_DocHit = Row("doc_id", "snippet")
+
+
+def fallback_search(
+    spark: SparkSession, sf_dir: str, tokens: list[str]
+) -> tuple[str, list[Row]]:
+    """The AND → OR fallback in one scan: ``(stage, rows)``.
+
+    The scan keeps documents matching any token, flags those matching
+    all of them, and orders flagged rows first, then by ``doc_id``,
+    LIMIT 100.  Flagged rows at the front are the AND answer in
+    ``doc_id`` order; with none, the rows are the OR answer.  Either
+    way the rows equal the separate AND or OR ``fulltext_search``."""
+    hits = _term_hits(tokens)
+    rows = (
+        _documents(spark, sf_dir)
+        .filter(reduce(operator.or_, hits))
+        .select(
+            "doc_id",
+            F.substring("text", 1, 120).alias("snippet"),
+            reduce(operator.and_, hits).alias("all_terms"),
+        )
+        .orderBy(F.desc("all_terms"), "doc_id")
+        .limit(FALLBACK_LIMIT)
+        .collect()
+    )
+    n_all = sum(r["all_terms"] for r in rows)
+    stage = "fallback_and" if n_all else "fallback_or"
+    return stage, [_DocHit(r["doc_id"], r["snippet"]) for r in rows[: n_all or None]]
 
 
 # Synthesizer seam (Q4): (question, formatted_rows) -> answer text.
@@ -375,12 +445,17 @@ def answer(
     compiler: Compiler | None = None,
     history: list[str] | None = None,
 ) -> dict:
-    """Full serving cascade: compile → execute → (empty? AND-fallback →
-    OR-fallback) → format → synthesize.  Returns a dict with the answer
-    text and provenance of which stage produced it.  ``history`` (prior
-    user turns) feeds the Q5 multi-turn glue: a follow-up naming no
-    quoted entity inherits the conversation's most recent quoted terms
-    (see ``planner.plan``)."""
+    """Serving cascade: compile → template stage → (empty? one-scan
+    fallback) → format → synthesize.  Returns a dict with the answer
+    text, the stage that produced it (``template``, ``fallback_and``,
+    ``fallback_or`` or ``empty``), the plan's template and the row count.
+
+    Each stage is built only once the previous one returned no rows, so
+    a template hit plans and runs one query.  The fallback searches the
+    plan's terms split into words (see :func:`fallback_search`).
+    ``history`` (prior user turns) feeds the Q5 multi-turn glue: a
+    follow-up naming no quoted entity inherits the conversation's most
+    recent quoted terms (see ``planner.plan``)."""
     synth = synthesizer or default_synthesizer
     if compiler is None:
         p = plan(question, history=history)
@@ -397,30 +472,16 @@ def answer(
         # degrade to the fallback search over its terms, the same
         # error→fallback shape as the reference (`:329-344`).
         p = QueryPlan(template=FALLBACK_TEMPLATE, params={}, terms=p.terms)
-    stages = [("template", execute_plan(spark, sf_dir, p))]
+    stage, rows = "template", execute_plan(spark, sf_dir, p).collect()
     # fallback scans tokenize multi-word quoted terms so a partially
     # wrong entity name can still hit (mirrors the reference's per-term
     # regex conjunction/disjunction, `neo4j_query_executor.py:414-441`)
     tokens = [w for t in p.terms for w in t.split()]
-    if tokens:
-        # when the template stage already WAS the AND-fulltext over
-        # exactly these tokens (single-word terms), fallback_and would
-        # re-run a byte-identical full scan — skip straight to OR
-        if not (p.template == FALLBACK_TEMPLATE and tokens == p.terms):
-            stages.append(("fallback_and", fulltext_search(spark, sf_dir, tokens, True)))
-        stages.append(("fallback_or", fulltext_search(spark, sf_dir, tokens, False)))
-    for stage, df in stages:
-        rows = df.collect()
-        if rows:
-            return {
-                "answer": synth(question, format_rows(rows)),
-                "stage": stage,
-                "template": p.template,
-                "n_rows": len(rows),
-            }
+    if not rows and tokens:
+        stage, rows = fallback_search(spark, sf_dir, tokens)
     return {
-        "answer": synth(question, ""),
-        "stage": "empty",
+        "answer": synth(question, format_rows(rows) if rows else ""),
+        "stage": stage if rows else "empty",
         "template": p.template,
-        "n_rows": 0,
+        "n_rows": len(rows),
     }

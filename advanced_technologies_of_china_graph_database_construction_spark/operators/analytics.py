@@ -38,6 +38,17 @@ def symmetric_edges(pairs: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     return fwd.unionByName(rev)
 
 
+def _literal_column(spark, name: str, values: list, dtype) -> DataFrame:
+    """One-column frame of ``values`` cast to ``dtype`` (the edge id type)
+    as a JVM-local relation.  ``createDataFrame(list)`` goes through
+    ``sc.parallelize``, so every scan of it starts Python workers; an
+    Arrow table becomes a ``LocalRelation`` instead."""
+    import pyarrow as pa
+
+    df = spark.createDataFrame(pa.table({name: pa.array(values)}))
+    return df.select(F.col(name).cast(dtype).alias(name))
+
+
 def _hoisted_edge_frame(
     edges: DataFrame, weight: str | None
 ) -> tuple[DataFrame, DataFrame]:
@@ -241,8 +252,6 @@ def personalized_pagerank(
     g21/g24.  ``weight`` follows the ``pagerank`` contract exactly:
     rank·w/Σw messages, non-positive/NULL weights dropped up front.
     """
-    from pyspark.sql import types as T
-
     seed_list = list(dict.fromkeys(seeds))
     if not seed_list:
         raise ValueError("personalized_pagerank needs at least one seed")
@@ -260,11 +269,8 @@ def personalized_pagerank(
             # downstream rank/distance (r12 review)
             & (F.col(weight) > 0)
         )
-    spark = edges.sparkSession
-    node_type = edges.schema["src"].dataType
-    sdf = spark.createDataFrame(
-        [(s,) for s in seed_list],
-        T.StructType([T.StructField("node", node_type)]),
+    sdf = _literal_column(
+        edges.sparkSession, "node", seed_list, edges.schema["src"].dataType
     ).withColumn("__r", F.lit(1.0 / len(seed_list)))
     # Node set includes the seeds even when a seed appears in no edge:
     # an isolated seed is a legitimate node holding its teleport share
@@ -639,7 +645,9 @@ def bfs_distances(
         # the g33 incident shape (min(src) over an empty graph): a NULL
         # source is always a caller bug and would silently yield empty
         raise ValueError("bfs_distances source must be non-NULL")
-    src_row = edges.sparkSession.createDataFrame([(source,)], ["node"])
+    src_row = _literal_column(
+        edges.sparkSession, "node", [source], edges.schema["src"].dataType
+    )
     dist = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -805,19 +813,20 @@ def multi_source_bfs(
     """
     if mode not in ("dense", "sparse"):
         raise ValueError(f"mode={mode!r}; must be 'dense' or 'sparse'")
-    seed_rows = [(s,) for s in sources]
-    if not seed_rows:
+    sources = list(sources)
+    if not sources:
         raise ValueError("multi_source_bfs needs at least one source")
     edges = edges.select("src", "dst").repartition("src").persist()
     edges.count()
-    spark = edges.sparkSession
+    seed_col = _literal_column(
+        edges.sparkSession, "seed", sources, edges.schema["src"].dataType
+    )
     if mode == "sparse":
         # try/finally: a superstep failure (OOM, task abort) must not
         # leave |E| pinned in the block manager for the session's life
         try:
             settled = (
-                spark.createDataFrame(seed_rows, ["seed"])
-                .distinct()
+                seed_col.distinct()
                 .select("seed", F.col("seed").alias("node"), F.lit(0).alias("dist"))
                 .localCheckpoint(eager=True)
             )
@@ -844,16 +853,14 @@ def multi_source_bfs(
         finally:
             edges.unpersist()
         return settled
-    seeds = F.broadcast(
-        spark.createDataFrame(seed_rows, ["seed"]).distinct()
-    )
+    seeds = F.broadcast(seed_col.distinct())
     # Seed ids union into the node set (|S| rows) so a seed absent from
     # the edge list still reports (seed, seed, 0) — per-seed
     # bfs_distances semantics — instead of silently emitting no rows.
     dist = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
-        .unionByName(spark.createDataFrame(seed_rows, ["node"]))
+        .unionByName(seed_col.withColumnRenamed("seed", "node"))
         .distinct()
         .crossJoin(seeds)
         .select(
@@ -1225,8 +1232,10 @@ def strongly_connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    spark = e.sparkSession
-    assigned = spark.createDataFrame([], "node long, component long")
+    # an empty JVM-local frame: createDataFrame([]) would parallelize
+    assigned = e.sparkSession.range(0).select(
+        F.col("id").alias("node"), F.col("id").alias("component")
+    )
 
     # every endpoint of the INPUT (self-loops included) must receive a
     # component.  Two paths silently orphan a node from the loop below:

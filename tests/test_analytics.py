@@ -620,6 +620,58 @@ def test_multi_source_bfs_isolated_seed_reports_itself(spark):
     assert got == {(1, 1): 0, (1, 2): 1, (1, 3): 2, (99, 99): 0}
 
 
+def test_literal_frames_start_no_python_workers(spark, monkeypatch):
+    """Seed frames and SCC's empty start state are JVM-local relations:
+    PPR, BFS, both multi-source BFS modes and SCC never call
+    ``sc.parallelize`` (whose scans start Python workers), and seed
+    columns keep the edge id type, string ids included."""
+    import pyarrow as pa
+    from pyspark import SparkContext
+
+    from advanced_technologies_of_china_graph_database_construction_spark.operators.analytics import (
+        bfs_distances,
+        multi_source_bfs,
+        personalized_pagerank,
+        strongly_connected_components,
+    )
+
+    def edges_of(pairs, typ):
+        src, dst = zip(*pairs)
+        return spark.createDataFrame(
+            pa.table({"src": pa.array(src, typ), "dst": pa.array(dst, typ)})
+        )
+
+    def no_parallelize(*_a, **_kw):
+        raise AssertionError("sc.parallelize called")
+
+    monkeypatch.setattr(SparkContext, "parallelize", no_parallelize)
+    longs = edges_of([(1, 2), (2, 3), (3, 1), (3, 4)], pa.int64())
+    ppr = {r.node: r.ppr for r in personalized_pagerank(longs, [1], n_iter=2).collect()}
+    assert set(ppr) == {1, 2, 3, 4} and sum(ppr.values()) == pytest.approx(1.0)
+    dist = {r.node: r.dist for r in bfs_distances(longs, 1, max_hops=3).collect()}
+    assert dist == {1: 0, 2: 1, 3: 2, 4: 3}
+    for mode in ("dense", "sparse"):
+        got = {
+            (r.seed, r.node): r.dist
+            for r in multi_source_bfs(longs, [1, 4], max_hops=3, mode=mode).collect()
+        }
+        assert got == {(1, 1): 0, (1, 2): 1, (1, 3): 2, (1, 4): 3, (4, 4): 0}, mode
+    scc = {r.node: r.component for r in strongly_connected_components(longs).collect()}
+    assert scc == {1: 1, 2: 1, 3: 1, 4: 4}
+
+    strs = edges_of([("a", "b"), ("b", "c")], pa.string())
+    ms = multi_source_bfs(strs, ["a"], max_hops=2)
+    assert ms.schema["seed"].dataType == strs.schema["src"].dataType
+    assert {(r.seed, r.node): r.dist for r in ms.collect()} == {
+        ("a", "a"): 0, ("a", "b"): 1, ("a", "c"): 2,
+    }
+    assert {r.node: r.dist for r in bfs_distances(strs, "a", max_hops=2).collect()} == {
+        "a": 0, "b": 1, "c": 2,
+    }
+    ppr_s = personalized_pagerank(strs, ["a"], n_iter=1)
+    assert ppr_s.schema["node"].dataType == strs.schema["src"].dataType
+
+
 def test_landmark_harmonic_folds_reciprocal_distances(spark):
     """On a path graph 0-1-2-3 with seeds {0, 3}: node 1 sees dists
     (1, 2) → harmonic 1.5; seeds see each other (dist 3) → 1/3."""

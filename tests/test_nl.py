@@ -3,6 +3,8 @@ fallback cascade, and formatting — on the sf0.001 graph."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from advanced_technologies_of_china_graph_database_construction_spark.nl import engine, formatter, planner
@@ -108,6 +110,142 @@ def test_empty_cascade(spark):
     out = engine.answer(spark, SF, 'Who wrote "zzqx_none_anywhere"?')
     assert out["stage"] == "empty"
     assert out["answer"] == "No results found."
+
+
+# ------------------------------------------------- one-scan fallback ----
+
+def _write_documents(sf_dir, texts):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"doc_id": pa.array(range(1, len(texts) + 1), pa.int64()), "text": texts}),
+        os.path.join(sf_dir, "documents.parquet"),
+    )
+
+
+_TEXTS = [
+    "alpha gamma beta",  # 1: both tokens, not as one phrase
+    "alpha only",  # 2
+    "beta only",  # 3
+    "Alpha delta BETA",  # 4: both tokens, other case
+    "nothing here",  # 5
+]
+
+
+def _fulltext_answer(spark, sf_dir, terms, rows_of):
+    """answer() on a fulltext-planned question over ``terms``, plus the
+    rows a separate ``fulltext_search`` returns for ``rows_of``
+    (``(tokens, require_all)``; no rows when it is None)."""
+    q = "Find documents mentioning " + " or ".join(f'"{t}"' for t in terms)
+    assert planner.plan(q).template == planner.FALLBACK_TEMPLATE
+    out = engine.answer(spark, sf_dir, q)
+    want = engine.fulltext_search(spark, sf_dir, *rows_of).collect() if rows_of else []
+    return q, out, want
+
+
+@pytest.mark.parametrize(
+    "terms,stage,rows_of,doc_ids",
+    [
+        # template (the phrase "alpha beta") misses; AND of the tokens
+        # matches fewer documents than their OR
+        (["alpha beta"], "fallback_and", (["alpha", "beta"], True), [1, 4]),
+        (["alpha zzqx"], "fallback_or", (["alpha", "zzqx"], False), [1, 2, 4]),
+        (["zzqx yyqx"], "empty", None, []),
+        # single-word terms: the template stage already was the AND scan
+        (["gamma"], "template", (["gamma"], True), [1]),
+        (["alpha", "zzqx"], "fallback_or", (["alpha", "zzqx"], False), [1, 2, 4]),
+    ],
+)
+def test_one_scan_fallback_stages(spark, tmp_path, terms, stage, rows_of, doc_ids):
+    _write_documents(tmp_path, _TEXTS)
+    q, out, want = _fulltext_answer(spark, str(tmp_path), terms, rows_of)
+    assert out["stage"] == stage
+    assert [r["doc_id"] for r in want] == doc_ids
+    assert out["n_rows"] == len(want)
+    assert out["answer"] == engine.default_synthesizer(q, formatter.format_rows(want))
+
+
+def test_fallback_is_one_collect(spark, tmp_path, monkeypatch):
+    """A template miss costs the template query plus ONE fallback scan,
+    whichever of AND or OR answers."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    _write_documents(tmp_path, _TEXTS)
+    calls = []
+    orig = DataFrame.collect
+    monkeypatch.setattr(DataFrame, "collect", lambda df: calls.append(1) or orig(df))
+    for term, stage in (("alpha beta", "fallback_and"), ("alpha zzqx", "fallback_or")):
+        calls.clear()
+        out = engine.answer(spark, str(tmp_path), f'Find documents mentioning "{term}"')
+        assert (out["stage"], len(calls)) == (stage, 2)
+
+
+def test_template_hit_never_reads_documents(spark, tmp_path, monkeypatch):
+    """The cascade is lazy: a template hit plans no fallback, so a
+    dataset without ``documents`` still answers from the graph."""
+    import shutil
+
+    from advanced_technologies_of_china_graph_database_construction_spark.operators import graph
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for name in os.listdir(SF):
+        if name != "documents.parquet":
+            shutil.copy(os.path.join(SF, name), sf / name)
+    monkeypatch.setattr(graph, "_STORE_ROOT", str(tmp_path / "store"))
+    out = engine.answer(spark, str(sf), 'List papers written by "Customer#000000001"')
+    assert out["stage"] == "template" and out["n_rows"] > 0
+
+
+def test_session_documents_frame_follows_file_rewrite(spark, tmp_path):
+    """The once-per-session ``documents`` frame is keyed on the file's
+    stat fingerprint: rewriting the file at the same path is seen."""
+    q = 'Find documents mentioning "alpha beta"'
+    _write_documents(tmp_path, _TEXTS)
+    first = engine.answer(spark, str(tmp_path), q)
+    assert (first["stage"], first["n_rows"]) == ("fallback_and", 2)
+    _write_documents(tmp_path, ["none", "none", "beta then alpha", "x", "y", "alpha beta!"])
+    second = engine.answer(spark, str(tmp_path), q)
+    assert (second["stage"], second["n_rows"]) == ("template", 1)
+    assert "doc_id: 6, snippet: alpha beta!" in second["answer"]
+    _write_documents(tmp_path, ["beta, alpha", "alpha"])
+    third = engine.answer(spark, str(tmp_path), q)
+    assert (third["stage"], third["n_rows"]) == ("fallback_and", 1)
+    assert "doc_id: 1, snippet: beta, alpha" in third["answer"]
+
+
+# Spark jobs one warm answer() of each outcome may run on sf0.001: the
+# measured count rounded up to a power of two.  Counts repeat exactly
+# from run to run; lowering a budget is the evidence for a serving-path
+# speed claim, raising one needs a reason.
+SERVING_JOB_BUDGETS = {
+    'List papers written by "Customer#000000001"': ("template", 4),
+    'Who wrote "spark merge"?': ("fallback_and", 4),
+    'Who wrote "spark zzqx_none"?': ("fallback_or", 4),
+    'Who wrote "zzqx_none_anywhere"?': ("empty", 4),
+}
+
+
+def test_serving_job_budget(spark):
+    import uuid
+
+    sc = spark.sparkContext
+    jobs = {}
+    for q, (stage, _budget) in SERVING_JOB_BUDGETS.items():
+        assert engine.answer(spark, SF, q)["stage"] == stage  # warm: store, documents
+        group = f"serving-budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            engine.answer(spark, SF, q)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        jobs[q] = len(sc.statusTracker().getJobIdsForGroup(group))
+    over = {q: (n, SERVING_JOB_BUDGETS[q][1]) for q, n in jobs.items()
+            if n > SERVING_JOB_BUDGETS[q][1]}
+    assert not over, f"serving jobs over budget (got, budget): {over}; all: {jobs}"
 
 
 def test_alias_aware_keyword_lookup(spark):
